@@ -4,12 +4,15 @@
 from __future__ import annotations
 
 import datetime
+import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from youbike_etl_pipeline_spark.pipelines.youbike import (
     build_gold_table,
     ingest_snapshot,
+    run_ingest_cli,
     tableau_master_dataset,
     weather_to_df,
 )
@@ -90,3 +93,62 @@ def test_tableau_export(spark, tmp_path):
     csvs = list((tmp_path / "tableau").glob("*.csv"))
     assert len(csvs) == 1
     assert csvs[0].read_bytes().startswith(b"\xef\xbb\xbf")  # utf-8-sig BOM
+
+
+@pytest.mark.parametrize(
+    "temperature, precipitation, want",
+    [
+        ([21, 22], [0, 3], [(21.0, 0.0), (22.0, 3.0)]),  # all ints
+        ([20.5, 22], [0, 3.0], [(20.5, 0.0), (22.0, 3.0)]),  # ints mixed with floats
+        (["21.5", "22"], ["0.5", 1], [(21.5, 0.5), (22.0, 1.0)]),  # numeric strings
+        ([21.0, 22.0], [None, None], [(21.0, None), (22.0, None)]),  # all-null column
+    ],
+    ids=["all_int", "mixed_int_float", "numeric_str", "all_null"],
+)
+def test_weather_to_df_coerces_readings(spark, temperature, precipitation, want):
+    weather = weather_to_df(
+        spark,
+        {
+            "time": ["2025-12-10T07:00", "2025-12-10T08:00"],
+            "temperature_2m": temperature,
+            "precipitation": precipitation,
+        },
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in weather.schema.fields] == [
+        ("record_time", "timestamp"),
+        ("temperature", "double"),
+        ("rain", "double"),
+    ]
+    rows = weather.orderBy("record_time").collect()
+    assert [r["record_time"].hour for r in rows] == [7, 8]
+    assert [(r["temperature"], r["rain"]) for r in rows] == want
+
+
+def test_ingest_cli_rerun_is_noop(spark, tmp_path, monkeypatch, capsys):
+    """The cron path: a second run on the same snapshot appends nothing."""
+    from youbike_etl_pipeline_spark import session
+
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    snapshot = tmp_path / "snapshot.json"
+    snapshot.write_text(
+        json.dumps(
+            [
+                _snapshot("5001", 5, 30, "2025-12-10 15:00:00"),
+                _snapshot("5001", 5, 30, "2025-12-10 15:00:00"),
+                _snapshot("5002", 3, 20, "2025-12-10 15:00:00"),
+            ]
+        ),
+        encoding="utf-8",
+    )
+    wh = tmp_path / "wh"
+    argv = ["--snapshot-json", str(snapshot), "--warehouse", str(wh)]
+
+    def counts():
+        return tuple(spark.read.parquet(str(wh / t)).count() for t in ("station_info", "station_status"))
+
+    assert run_ingest_cli(argv) == 0
+    assert json.loads(capsys.readouterr().out) == {"new_stations": 2, "new_status_rows": 2}
+    assert counts() == (2, 2)
+    assert run_ingest_cli(argv) == 0
+    assert capsys.readouterr().out.strip() == '{"new_stations": 0, "new_status_rows": 0}'
+    assert counts() == (2, 2)

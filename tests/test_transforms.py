@@ -45,6 +45,78 @@ def test_transform_success(spark):
     assert row["Quantity"] == 30
 
 
+def _outcome(build):
+    """``("ok", rows)`` or ``("err", TypeError | ValueError)`` of a frame build."""
+    try:
+        return "ok", [r.asDict() for r in build().collect()]
+    except (TypeError, ValueError) as exc:
+        return "err", TypeError if isinstance(exc, TypeError) else ValueError
+
+
+def _rec(**overrides):
+    return {**FULL_RECORD, **overrides}
+
+
+# Edge payloads and what the pickled-row ``createDataFrame`` path did with
+# them: the exception base class, or the loaded value of one field.
+VALIDATION_CASES = {
+    "sno_none": ([FULL_RECORD, _rec(sno=None)], ValueError),
+    "latitude_str": ([_rec(latitude="25.04")], TypeError),
+    "latitude_int": ([_rec(latitude=25)], TypeError),
+    "quantity_str": ([_rec(Quantity="30")], TypeError),
+    "quantity_float": ([_rec(Quantity=30.5)], TypeError),
+    "quantity_bool": ([_rec(Quantity=True)], TypeError),
+    "quantity_out_of_range": ([_rec(Quantity=2**31)], ValueError),
+    "rent_bikes_below_range": ([_rec(available_rent_bikes=-(2**31) - 1)], ValueError),
+    "sno_int": ([_rec(sno=500101001)], ("sno", "500101001")),
+    "sno_bool": ([_rec(sno=True)], ("sno", "true")),
+    "sna_float": ([_rec(sna=1e20)], ("sna", "1e+20")),
+    "sna_missing_in_one": ([FULL_RECORD, {k: v for k, v in FULL_RECORD.items() if k != "sna"}], ("sna", None)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(VALIDATION_CASES))
+def test_snapshot_validation_parity(spark, case):
+    """The Arrow-built snapshot accepts and rejects exactly what the pickled
+    ``createDataFrame(list_of_dicts, schema)`` path does, with the same
+    exception base class and the same loaded values."""
+    from youbike_etl_pipeline_spark.schemas import RAW_STATION_SNAPSHOT
+
+    records, expected = VALIDATION_CASES[case]
+    names = RAW_STATION_SNAPSHOT.names
+    legacy = _outcome(
+        lambda: spark.createDataFrame([{n: r.get(n) for n in names} for r in records], RAW_STATION_SNAPSHOT)
+    )
+    got = _outcome(lambda: snapshot_to_df(spark, records))
+    assert got == legacy
+    if isinstance(expected, tuple):
+        field, value = expected
+        assert got[0] == "ok" and got[1][-1][field] == value
+    else:
+        assert got == ("err", expected)
+
+
+@pytest.mark.parametrize("with_existing", [False, True])
+def test_ingest_plans_scan_local_relation(spark, tmp_path, with_existing):
+    """The ingest tick starts from a driver-local relation: no pickled-row
+    RDD, so no Python worker runs when the new rows are written."""
+    from youbike_etl_pipeline_spark.pipelines.youbike import ingest_snapshot
+
+    existing_info = existing_status = None
+    if with_existing:
+        info, status = ingest_snapshot(spark, [FULL_RECORD])
+        info.write.parquet(str(tmp_path / "info"))
+        status.write.parquet(str(tmp_path / "status"))
+        existing_info = spark.read.parquet(str(tmp_path / "info"))
+        existing_status = spark.read.parquet(str(tmp_path / "status"))
+    batch = [FULL_RECORD, _rec(sno="500101002", srcUpdateTime="2025-12-10 15:10:00")]
+    new_info, new_status = ingest_snapshot(spark, batch, existing_info, existing_status)
+    for df in (new_info, new_status):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert (new_info.count(), new_status.count()) == ((1, 1) if with_existing else (2, 2))
+
+
 def test_tz_normalize_taipei_to_utc(spark):
     df = spark.createDataFrame([("2025-12-10 15:00:00",)], "ts_str string").select(
         to_utc_from_tz(F.to_timestamp("ts_str")).alias("utc")
@@ -61,6 +133,22 @@ def test_append_dedup_idempotent(spark):
     # re-running the same batch against what was loaded inserts nothing
     second = append_dedup(batch, first, ["k", "t"])
     assert second.count() == 0
+
+
+def test_anti_joins_tolerate_duplicate_existing_keys(spark):
+    """Both anti-joins read the existing side without deduplicating it;
+    duplicate keys there must still exclude, and never multiply, rows."""
+    existing = spark.createDataFrame(
+        [("a", 1, 10), ("a", 1, 11), ("c", 3, 30), ("c", 3, 30)], "k string, t int, v int"
+    )
+    batch = spark.createDataFrame([("a", 1, 99), ("b", 2, 20), ("b", 2, 21)], "k string, t int, v int")
+    rows = append_dedup(batch, existing, ["k", "t"]).collect()
+    assert [(r["k"], r["t"]) for r in rows] == [("b", 2)]
+
+    incoming = spark.createDataFrame([("s1", "x"), ("s2", "y")], "station_no string, name string")
+    existing_keys = spark.createDataFrame([("s1",), ("s1",), ("s3",)], "station_no string")
+    rows = upsert_insert_if_absent(incoming, existing_keys, "station_no").collect()
+    assert [(r["station_no"], r["name"]) for r in rows] == [("s2", "y")]
 
 
 def test_upsert_insert_if_absent(spark):

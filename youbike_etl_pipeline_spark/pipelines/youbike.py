@@ -32,9 +32,10 @@ from ..functions.scalar import (
 )
 from ..operators.joins import fact_dim_join, hour_bucket_join
 from ..operators.windows import lag_features
-from ..schemas import WEATHER_HOURLY
+from ..schemas import RAW_WEATHER_HOURLY
 from ..sources.http import snapshot_to_df
-from ..sources.writers import append_dedup, upsert_insert_if_absent, write_csv
+from ..sources.readers import local_relation
+from ..sources.writers import append_dedup, upsert_insert_if_absent, write_csv, write_parquet
 
 
 def ingest_snapshot(
@@ -83,9 +84,13 @@ def ingest_snapshot(
 def weather_to_df(spark: SparkSession, hourly: dict[str, list]) -> DataFrame:
     """Weather ETL (reference ``02_weather_etl``): Open-Meteo-style
     dict-of-lists {time, temperature_2m, precipitation} → typed hourly
-    series with the engine's column names."""
+    series with the engine's column names.
+
+    Readings are coerced with ``float()`` against a declared raw schema, so
+    ints mixed with floats, numeric strings and all-null columns all load
+    (no type inference); a non-numeric reading raises ``ValueError``."""
     rows = [
-        {"record_time": t, "temperature": temp, "rain": rain}
+        {"time": t, "temperature_2m": _to_float(temp), "precipitation": _to_float(rain)}
         for t, temp, rain in zip(
             hourly.get("time", []),
             hourly.get("temperature_2m", []),
@@ -94,12 +99,16 @@ def weather_to_df(spark: SparkSession, hourly: dict[str, list]) -> DataFrame:
     ]
     if not rows:
         raise ValueError("empty weather payload")
-    df = spark.createDataFrame(rows)
+    df = local_relation(spark, rows, RAW_WEATHER_HOURLY)
     return df.select(
-        F.to_timestamp("record_time").alias("record_time"),
-        F.col("temperature").cast("double"),
-        F.col("rain").cast("double"),
+        F.to_timestamp("time").alias("record_time"),
+        F.col("temperature_2m").alias("temperature"),
+        F.col("precipitation").alias("rain"),
     )
+
+
+def _to_float(value) -> float | None:
+    return None if value is None else float(value)
 
 
 def build_gold_table(
@@ -198,9 +207,9 @@ def run_ingest_cli(argv: list[str] | None = None) -> int:
     new_info, new_status = ingest_snapshot(spark, records, existing_info, existing_status)
     n_info, n_status = new_info.count(), new_status.count()
     if n_info:
-        new_info.write.mode("append").parquet(info_path)
+        write_parquet(new_info, info_path)
     if n_status:
-        new_status.write.mode("append").parquet(status_path)
+        write_parquet(new_status, status_path)
     print(json.dumps({"new_stations": n_info, "new_status_rows": n_status}))
     return 0
 

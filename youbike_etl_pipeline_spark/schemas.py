@@ -72,6 +72,16 @@ STATION_STATUS = T.StructType(
     ]
 )
 
+#: Raw Open-Meteo hourly payload, one row per hour of the dict-of-lists
+#: (reference ``notebooks/02_weather_etl.ipynb``).
+RAW_WEATHER_HOURLY = T.StructType(
+    [
+        T.StructField("time", T.StringType(), True),
+        T.StructField("temperature_2m", T.DoubleType(), True),
+        T.StructField("precipitation", T.DoubleType(), True),
+    ]
+)
+
 #: Hourly weather series (reference ``notebooks/02_weather_etl.ipynb:L199-L206``).
 WEATHER_HOURLY = T.StructType(
     [

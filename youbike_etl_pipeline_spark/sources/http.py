@@ -3,9 +3,11 @@
 Fetching a city-API JSON snapshot is inherently a driver-side action (one
 small payload per 10-minute tick), so the retry loop stays plain Python —
 exactly the reference's shape (3 attempts, linear backoff ``2.0 * attempt``,
-``raise_for_status``; ``etl_job.py:64-80``). The distributed part starts at
-``createDataFrame``: the payload becomes a schema-validated DataFrame that the
-rest of the engine treats like any other source.
+``raise_for_status``; ``etl_job.py:64-80``). The payload then becomes a
+schema-validated, driver-local relation (``LocalTableScan``, built from one
+Arrow table by :func:`.readers.local_relation`) that the rest of the engine
+treats like any other source; no Python worker runs for it, so every action on
+the frame stays in the JVM.
 
 ``requests`` is gated behind an import-try: the engine works without it (tests
 inject payloads directly via :func:`snapshot_to_df`).
@@ -60,7 +62,9 @@ def snapshot_to_df(spark: SparkSession, records: list[dict[str, Any]]) -> DataFr
     Empty payload raises ``ValueError`` and missing required fields raise
     ``KeyError`` — the reference's transform contract
     (``tests/test_etl.py:18-28``, ``etl_job.py:89-97``). A field null in
-    *every* record counts as missing.
+    *every* record counts as missing. Per-record type errors keep
+    ``createDataFrame``'s contract: a wrong type raises ``TypeError``, a null
+    ``sno`` or an out-of-range int raises ``ValueError``.
     """
     if not records:
         raise ValueError("empty extract: no records returned from source")

@@ -14,9 +14,12 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -61,14 +64,47 @@ def read_json_records(spark: SparkSession, records: list[dict], schema: T.Struct
     """JSON list-of-dicts → DataFrame with declared schema (S2).
 
     The reference flattens the API payload with ``pd.DataFrame(raw_data)``
-    (``etl_job.py:88``); here the driver-side payload becomes a distributed
-    frame via ``createDataFrame`` with an explicit schema — missing keys
-    surface as nulls and are caught by the required-column validator.
+    (``etl_job.py:88``); here the driver-side payload becomes a driver-local
+    relation (:func:`local_relation`) with an explicit schema — missing keys
+    surface as nulls and are caught by the required-column validator. No
+    Python worker ever touches the rows: the plan starts at a
+    ``LocalTableScan``, so writing the frame twice re-reads JVM memory.
     """
     if not records:
         raise ValueError("empty extract: no records returned from source")
-    rows = [{f.name: rec.get(f.name) for f in schema.fields} for rec in records]
-    return spark.createDataFrame(rows, schema=schema)
+    return local_relation(spark, records, schema)
+
+
+def local_relation(spark: SparkSession, records: Iterable[dict], schema: T.StructType) -> DataFrame:
+    """Driver-side dict rows → JVM ``LocalRelation`` through one Arrow table.
+
+    ``createDataFrame(list_of_dicts)`` pickles the rows into an RDD that
+    Python workers unpickle on every action. An Arrow table instead becomes
+    a ``LocalRelation``: the plan shows ``LocalTableScan`` and the optimizer
+    folds projections over it at plan time.
+
+    Arrow alone would loosen validation (it truncates ``30.5`` into an int
+    column and accepts ints in double columns), so each row first goes
+    through the verifier ``createDataFrame`` applies to Python rows — same
+    accept/reject outcome and ``TypeError``/``ValueError`` classes — and the
+    same converter, which stringifies non-``str`` values in string fields
+    (``True`` → ``"true"``, ``5001`` → ``"5001"``). Meant for flat schemas of
+    atomic types (the API and weather payloads).
+    """
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    names = schema.names
+    rows = []
+    for rec in records:
+        row = tuple(rec.get(n) for n in names)
+        verify(row)
+        rows.append(convert(row))
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(names)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 #: Encoding/separator candidates the reference cycles through

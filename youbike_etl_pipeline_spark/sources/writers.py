@@ -173,8 +173,9 @@ def append_dedup(new_rows: DataFrame, existing: DataFrame | None, keys: list[str
     batch = new_rows.dropDuplicates(keys)
     if existing is None:
         return batch
-    existing_keys = existing.select(*keys).dropDuplicates(keys)
-    return batch.join(existing_keys, on=keys, how="left_anti")
+    # A left-anti join ignores duplicate keys on its right side, so the
+    # existing (ever-growing) warehouse keys are not deduplicated first.
+    return batch.join(existing.select(*keys), on=keys, how="left_anti")
 
 
 def upsert_insert_if_absent(incoming: DataFrame, existing_keys: DataFrame, key: str) -> DataFrame:
@@ -186,7 +187,7 @@ def upsert_insert_if_absent(incoming: DataFrame, existing_keys: DataFrame, key: 
     the anti-join is shuffle-free on the big side.
     """
     return incoming.dropDuplicates([key]).join(
-        F.broadcast(existing_keys.select(key).distinct()), on=key, how="left_anti"
+        F.broadcast(existing_keys.select(key)), on=key, how="left_anti"
     )
 
 
